@@ -41,27 +41,45 @@ SHINGLE_WORDS = 3
 
 
 #: per-process memo of built Column expression trees for the pure
-#: builders below, keyed by (builder, arg reprs).  Same rationale and
-#: safety argument as operators/similarity._COL_MEMO (r11): the builders
-#: are pure functions of module constants and their inputs, Columns are
-#: immutable unresolved expression trees resolved per plan (valid across
-#: DataFrames and in-process session restarts), and constructing the
-#: bigger ones costs 0.1-0.4s of py4j round-trips per call — paid by
-#: every text/quality query's timed region.
+#: builders decorated with :func:`memo_column` (here and the MinHash /
+#: SimHash signature builders in operators/similarity.py), keyed by
+#: (builder, arg reprs).  The builders are pure functions of module
+#: constants and their inputs, and constructing them costs 0.1-1.4s of
+#: py4j round-trips per call — paid by every text/quality/LSH query's
+#: timed region (r11).  A Column over bare column names is an immutable
+#: unresolved expression tree resolved per plan, so reuse across
+#: DataFrames AND across session restarts in one process is sound
+#: (verified: same values after spark.stop() + new session — the py4j
+#: gateway JVM owns the expression objects).
 _COL_MEMO: dict = {}
+
+#: the ColumnNode class behind ``F.col(name)``; ``df[name]`` is instead an
+#: ExpressionColumnNode wrapping df's resolved attribute
+_BARE_NAME_NODE = "org.apache.spark.sql.internal.UnresolvedAttribute"
+
+
+def _memo_key_part(a) -> str | None:
+    """``str(a)``, or None when ``a`` is a Column other than a bare column
+    name.  ``df["text"]`` stringifies exactly like ``F.col("text")`` but
+    resolves only against df's plan, so a tree built from it must never
+    be served to another DataFrame."""
+    if isinstance(a, Column) and a._jc.node().getClass().getName() != _BARE_NAME_NODE:
+        return None
+    return str(a)
 
 
 def memo_column(fn):
-    """Memoize a pure Column-builder by its args' string reprs."""
+    """Memoize a pure Column-builder by its args' string reprs; calls with
+    a plan-bound or compound Column argument are built, not memoized."""
     import functools
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        key = (
-            fn.__name__,
-            tuple(str(a) for a in args),
-            tuple(sorted((k, str(v)) for k, v in kwargs.items())),
-        )
+        arg_keys = tuple(_memo_key_part(a) for a in args)
+        kw_keys = tuple(sorted((k, _memo_key_part(v)) for k, v in kwargs.items()))
+        if None in arg_keys or any(v is None for _, v in kw_keys):
+            return fn(*args, **kwargs)
+        key = (fn, arg_keys, kw_keys)
         col = _COL_MEMO.get(key)
         if col is None:
             col = fn(*args, **kwargs)

@@ -33,7 +33,10 @@ import random
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import bind_once, normalize_text, word_shingles, tokens
+from ..cache import loop_conf
+from ..functions.text import (
+    bind_once, memo_column, normalize_text, word_shingles, tokens,
+)
 from ..functions.rounding import r6n, r6n_sql
 from ..sources.catalog import widen_for_compute
 
@@ -110,37 +113,13 @@ def _shingles_or_whole(text_col) -> Column:
     return F.when(F.size(sh) > 0, sh).otherwise(F.array(normalize_text(text_col)))
 
 
-#: per-process memo of the BUILT Column expression trees for the two
-#: signature builders, keyed by (builder, input-column repr).  The
-#: builders are pure functions of module constants and the input column,
-#: but constructing them costs hundreds of py4j round-trips — measured
-#: 0.3-1.4s of pure driver time PER CALL (r11), paid by every LSH query.
-#: A Column is an immutable unresolved expression tree resolved per
-#: plan, so reuse across DataFrames AND across session restarts in one
-#: process is sound (verified: same values after spark.stop() + new
-#: session — the py4j gateway JVM owns the expression objects).
-_COL_MEMO: dict[tuple[str, str], Column] = {}
-
-
-def _memo_col(kind: str, text_col, build) -> Column:
-    key = (kind, str(text_col))
-    col = _COL_MEMO.get(key)
-    if col is None:
-        col = build()
-        _COL_MEMO[key] = col
-    return col
-
-
+@memo_column
 def minhash_signature(text_col) -> Column:
     """array<long> of MINHASH_K minimum permuted shingle hashes.
 
     Base hash per shingle is computed once; each permutation is a
     multiply-add mod P over the materialized base array.
     """
-    return _memo_col("minhash_signature", text_col, lambda: _minhash_signature_build(text_col))
-
-
-def _minhash_signature_build(text_col) -> Column:
     base = F.transform(_shingles_or_whole(text_col), lambda s: hash60(s) % MERSENNE_P)
 
     def perm(a: int, b: int):
@@ -158,6 +137,7 @@ def _minhash_signature_build(text_col) -> Column:
     return _bind(base, all_perms)
 
 
+@memo_column
 def simhash32(text_col) -> Column:
     """32-bit SimHash over whitespace tokens (all occurrences, weight 1).
 
@@ -172,10 +152,6 @@ def simhash32(text_col) -> Column:
     power-of-two per strictly-positive counter (measured 2.4x, 0
     mismatches over every sf0.1 doc).
     """
-    return _memo_col("simhash32", text_col, lambda: _simhash32_build(text_col))
-
-
-def _simhash32_build(text_col) -> Column:
     hashes = F.transform(tokens(text_col), hash60)
     masks = F.array(*[F.lit(1 << j) for j in range(SIMHASH_BITS)])
     pows = F.array(*[F.lit(1 << j).cast("long") for j in range(SIMHASH_BITS)])
@@ -207,6 +183,14 @@ def _simhash32_build(text_col) -> Column:
 # ---------------------------------------------------------------------------
 # MinHash-LSH near-dup pipeline
 # ---------------------------------------------------------------------------
+#
+# Four building blocks are defined once in this module; every MinHash-LSH
+# operator, suite query and oracle calls them instead of copying them:
+#   * _sig_agreement  — Spark count of equal signature components;
+#   * _band_pairs     — Spark band explode + banded equi-join;
+#   * _sig_agree_sql  — the same count in DuckDB SQL;
+#   * _sig_cte + _bands_cte — the DuckDB CTE chain norm -> shingles ->
+#     base -> sig -> bands -> cand (oracle section below).
 
 
 def minhash_signatures(
@@ -273,40 +257,92 @@ def read_signatures_table(spark, path: str) -> DataFrame:
     return spark.read.schema(cached_parquet_schema(spark, path)).parquet(path)
 
 
-def _band_key(sig: Column, band: int) -> Column:
+def _band_key(sig: Column, band: int, rows: int = LSH_ROWS) -> Column:
     parts = [
-        F.element_at(sig, band * LSH_ROWS + i + 1).cast("string")
-        for i in range(LSH_ROWS)
+        F.element_at(sig, band * rows + i + 1).cast("string")
+        for i in range(rows)
     ]
     return F.concat_ws(",", *parts)
 
 
-def lsh_candidate_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
-    """Distinct candidate (id_a, id_b) pairs sharing at least one LSH band.
+def _sig_agreement(sig_a: Column, sig_b: Column) -> Column:
+    """Number of equal components of two signature arrays (int); the
+    MinHash Jaccard estimate is this over the signature length."""
+    return F.aggregate(
+        F.zip_with(
+            sig_a, sig_b, lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0))
+        ),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )
 
-    Plan: explode docs x bands -> equi-join on (band_id, band_key) ->
-    distinct.  Shuffles are keyed on band buckets; no cross join anywhere.
+
+def _band_pairs(
+    sigs_a: DataFrame,
+    sigs_b: DataFrame | None,
+    id_col: str,
+    bands: int = LSH_BANDS,
+    rows: int = LSH_ROWS,
+) -> DataFrame:
+    """(id_a, id_b, band_id), one row per band in which a signature of
+    ``sigs_a`` and one of ``sigs_b`` share the band key — a pair repeats
+    once per colliding band.  ``sigs_b=None`` pairs ``sigs_a`` with
+    itself, keeping id_a < id_b.  ``bands`` x ``rows`` must not exceed
+    the signature length.
+
+    Plan: explode docs x bands -> equi-join on (band_id, band_key).
+    Shuffles are keyed on band buckets; no cross join anywhere.
     """
-    bands = sigs.select(
-        F.col(id_col),
-        F.posexplode(
-            # bind: project-collapse would otherwise inline the signature
-            # expression into each of the LSH_BANDS x LSH_ROWS element_at's
-            _bind(
-                F.col("sig"),
-                lambda s: F.array(*[_band_key(s, b) for b in range(LSH_BANDS)]),
-            )
-        ).alias("band_id", "band_key"),
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    return (
-        a.join(b, ["band_id", "band_key"])
-        .where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
+
+    # built once for both sides: the key array costs ~400 py4j round trips
+    keys = F.posexplode(
+        # bind: project-collapse would otherwise inline the signature
+        # expression into each of the bands x rows element_at's
+        _bind(
+            F.col("sig"),
+            lambda s: F.array(*[_band_key(s, b, rows) for b in range(bands)]),
         )
-        .distinct()
+    ).alias("band_id", "band_key")
+
+    def keyed(sigs: DataFrame, out: str) -> DataFrame:
+        return sigs.select(F.col(id_col).alias(out), keys)
+
+    pairs = keyed(sigs_a, "id_a").join(
+        keyed(sigs_a if sigs_b is None else sigs_b, "id_b"), ["band_id", "band_key"]
     )
+    if sigs_b is None:
+        pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    return pairs.select("id_a", "id_b", "band_id")
+
+
+def _lsh_pairs(
+    sigs_a: DataFrame, sigs_b: DataFrame | None, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, est_jaccard) for the :func:`_band_pairs` candidates
+    whose signature-estimated Jaccard reaches ``threshold``; the one
+    band-and-verify path of :func:`near_dup_pairs_from_signatures`
+    (``sigs_b=None``) and :func:`asymmetric_near_dup_pairs`."""
+    cand = _band_pairs(sigs_a, sigs_b, id_col).select("id_a", "id_b").distinct()
+    sa = sigs_a.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
+    sb = (sigs_a if sigs_b is None else sigs_b).select(
+        F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b")
+    )
+    est = _sig_agreement(F.col("sig_a"), F.col("sig_b")).cast("double") / F.lit(
+        float(MINHASH_K)
+    )
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .withColumn("est_jaccard", est)
+        .where(F.col("est_jaccard") >= F.lit(threshold))
+        .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
+    )
+
+
+def lsh_candidate_pairs(sigs: DataFrame, id_col: str) -> DataFrame:
+    """Distinct candidate (id_a, id_b) pairs sharing at least one LSH band
+    (see :func:`_band_pairs`)."""
+    return _band_pairs(sigs, None, id_col).select("id_a", "id_b").distinct()
 
 
 def near_dup_pairs(
@@ -328,28 +364,7 @@ def near_dup_pairs_from_signatures(
     join, est-Jaccard joins, re-runs with a different threshold) then
     reads columnar signatures instead of re-hashing every shingle of the
     raw corpus."""
-    pairs = lsh_candidate_pairs(sigs, id_col)
-    sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = (
-        F.aggregate(
-            F.zip_with(
-                F.col("sig_a"),
-                F.col("sig_b"),
-                lambda x, y: F.when(x == y, F.lit(1)).otherwise(F.lit(0)),
-            ),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        ).cast("double")
-        / F.lit(float(MINHASH_K))
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", est)
-        .where(F.col("est_jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-    )
+    return _lsh_pairs(sigs, None, id_col, threshold)
 
 
 def near_dup_clusters(
@@ -481,31 +496,14 @@ def components_from_pairs(
     # one checkpoint job + one leaf scan instead of checkpoint + shuffle
     # join + count.  Label values are untouched.
     #
-    # AQE is switched OFF for the loop body (saved/restored around it,
-    # the streaming drain's conf pattern): with AQE on, every eager
+    # The loop body runs under cache.loop_conf (AQE off, static shuffle
+    # partitions from the edge/label leaves): with AQE on, every eager
     # checkpoint materializes each of the round's 2-4 exchanges as its
-    # own job — spatial_dbscan measured 107 jobs for one query.  The
-    # loop relations are leaves whose sizes AQE already fixed when the
-    # edge/label leaves materialized, so per-round re-optimization buys
-    # nothing; without it the round's lazy checkpoints chain and the
-    # convergence count executes the WHOLE round as ONE job.  The loop's
-    # static shuffle-partition count is derived from the materialized
-    # edge leaf's own partitioning (itself AQE-coalesced from bytes) —
-    # scale-adaptive, not a constant: a 100 TB edge relation keeps its
-    # thousands of partitions, the bench-scale graph gets 1.
-    spark = edges.sparkSession
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    loop_parts = max(
-        edges.rdd.getNumPartitions(), labels.rdd.getNumPartitions()
-    )
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    # own job — spatial_dbscan measured 107 jobs for one query; without
+    # it the round's lazy checkpoints chain and the convergence count
+    # executes the WHOLE round as ONE job.
+    with loop_conf(edges.sparkSession, edges, labels):
         labels = _components_loop(edges, labels, max_iters, compress)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # edges is a localCheckpoint: its blocks are released by the
     # ContextCleaner once the returned plan (whose LogicalRDD leaf pins
     # them) is garbage-collected — no unpersist handle to manage
@@ -578,9 +576,7 @@ def components_reach_cte(threshold: float = 0.5) -> str:
   FROM cand
   JOIN sig sa ON sa.id = cand.id_a
   JOIN sig sb ON sb.id = cand.id_b
-  WHERE list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))::DOUBLE
-        / {MINHASH_K}.0 >= {threshold}
+  WHERE {_sig_agree_sql()}::DOUBLE / {MINHASH_K}.0 >= {threshold}
 ),
 edges AS (
   SELECT id_a, id_b FROM pairs
@@ -710,9 +706,7 @@ pairs AS (
   FROM cand
   JOIN sig sa ON sa.id = cand.id_a
   JOIN sig sb ON sb.id = cand.id_b
-  WHERE list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))::DOUBLE
-        / {MINHASH_K}.0 >= {threshold}
+  WHERE {_sig_agree_sql()}::DOUBLE / {MINHASH_K}.0 >= {threshold}
 ),
 {",".join(parts)}
 {summary}
@@ -1348,52 +1342,79 @@ def _hash60_sql(expr: str) -> str:
     return f"('0x' || substr(md5({expr}), 1, {_HASH_HEX_CHARS}))::BIGINT"
 
 
-def _sig_cte(table: str = "documents", id_col: str = "doc_id") -> str:
-    """CTEs producing sig(id, sig LIST(BIGINT)) with MINHASH_K entries."""
+def _sig_cte(
+    table: str = "documents",
+    id_col: str = "doc_id",
+    *,
+    sided: bool = False,
+    prefix: str = "",
+) -> str:
+    """CTEs ``t``, ``sh``, ``based``, ``sig`` ending in sig(id, sig
+    LIST(BIGINT)) with MINHASH_K entries — the DuckDB twin of
+    :func:`minhash_signature`.  ``sided`` carries ``table``'s ``side``
+    column (0 = corpus/a, 1 = batch/b) through every CTE; ``prefix`` is
+    prepended to every CTE name, so a second chain can share a statement
+    with the first."""
     perm_exprs = ", ".join(
         f"list_min(list_transform(base, x -> ({a} * x + {b}) % {MERSENNE_P}))"
         for a, b in MINHASH_PERMS
     )
+    p, side = prefix, ", side" if sided else ""
     return f"""
-t AS (SELECT {id_col} AS id, {_NORM_SQL} AS norm, {_TOKS_SQL} AS toks FROM {table}),
-sh AS (
-  SELECT id,
+{p}t AS (SELECT {id_col} AS id{side}, {_NORM_SQL} AS norm, {_TOKS_SQL} AS toks FROM {table}),
+{p}sh AS (
+  SELECT id{side},
          CASE WHEN len(toks) >= 3
               THEN list_transform(generate_series(1, len(toks) - 2),
                                   i -> array_to_string(toks[i:i+2], ' '))
               ELSE [norm] END AS shingles
-  FROM t
+  FROM {p}t
 ),
-based AS (
-  SELECT id,
+{p}based AS (
+  SELECT id{side},
          list_transform(shingles, s -> {_hash60_sql('s')} % {MERSENNE_P}) AS base
-  FROM sh
+  FROM {p}sh
 ),
-sig AS (SELECT id, [{perm_exprs}] AS sig FROM based)
+{p}sig AS (SELECT id{side}, [{perm_exprs}] AS sig FROM {p}based)
 """
 
 
-def _bands_cte() -> str:
+def _bands_cte(*, sided: bool = False, prefix: str = "") -> str:
+    """CTEs ``bands`` and ``cand(id_a, id_b)`` over :func:`_sig_cte`'s
+    ``sig`` — the DuckDB twin of :func:`_band_pairs`: distinct pairs
+    sharing a band key, id_a < id_b, or with ``sided`` side-0 x side-1
+    pairs.  ``sided`` and ``prefix`` must match the :func:`_sig_cte`
+    call."""
+    p, side = prefix, ", side" if sided else ""
     band_selects = " UNION ALL ".join(
-        f"SELECT id, {b} AS band_id, "
+        f"SELECT id{side}, {b} AS band_id, "
         f"array_to_string(sig[{b * LSH_ROWS + 1}:{(b + 1) * LSH_ROWS}], ',') AS band_key, sig "
-        f"FROM sig"
+        f"FROM {p}sig"
         for b in range(LSH_BANDS)
     )
+    keep = "a.side = 0 AND b.side = 1" if sided else "a.id < b.id"
     return f"""
-bands AS ({band_selects}),
-cand AS (
+{p}bands AS ({band_selects}),
+{p}cand AS (
   SELECT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
-  WHERE a.id < b.id
+  FROM {p}bands a JOIN {p}bands b ON a.band_id = b.band_id AND a.band_key = b.band_key
+  WHERE {keep}
   GROUP BY 1, 2
 )
 """
 
 
+def _sig_agree_sql(k: int = MINHASH_K, a: str = "sa.sig", b: str = "sb.sig") -> str:
+    """DuckDB twin of :func:`_sig_agreement`: the number of equal
+    components among the first ``k`` of signature lists ``a`` and ``b``."""
+    return (
+        f"list_sum(list_transform(generate_series(1, {k}),"
+        f" i -> CASE WHEN {a}[i] = {b}[i] THEN 1 ELSE 0 END))"
+    )
+
+
 def near_dup_pairs_oracle_sql(threshold: float = 0.5) -> str:
-    eq_terms = f"""list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))"""
+    eq_terms = _sig_agree_sql()
     return f"""
 WITH {_sig_cte()}, {_bands_cte()}
 SELECT cand.id_a, cand.id_b,
@@ -1430,9 +1451,7 @@ pairs AS (
   FROM cand
   JOIN sig sa ON sa.id = cand.id_a
   JOIN sig sb ON sb.id = cand.id_b
-  WHERE list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))::DOUBLE
-        / {MINHASH_K}.0 >= {threshold}
+  WHERE {_sig_agree_sql()}::DOUBLE / {MINHASH_K}.0 >= {threshold}
 ),
 nmin AS (
   SELECT id, min(n) AS min_neighbor FROM (
@@ -2077,96 +2096,21 @@ def asymmetric_near_dup_pairs(
     fraction of equal MinHash components (k = 16 divides a power of
     two, so the ratio is exactly representable and hash-stable).
     """
-    def bands_of(sigs: DataFrame, out: str) -> DataFrame:
-        return sigs.select(
-            F.col(id_col).alias(out),
-            F.posexplode(
-                _bind(
-                    F.col("sig"),
-                    lambda s: F.array(*[_band_key(s, b) for b in range(LSH_BANDS)]),
-                )
-            ).alias("band_id", "band_key"),
-        )
-
-    cand = (
-        bands_of(sigs_a, "id_a")
-        .join(bands_of(sigs_b, "id_b"), ["band_id", "band_key"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sigs_a.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = sigs_b.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with(
-            F.col("sig_a"), F.col("sig_b"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ).cast("double") / F.lit(float(MINHASH_K))
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .where(F.col("est_jaccard") >= F.lit(threshold))
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-def _two_sided_sig_cte(raw_sql: str) -> str:
-    """CTE chain over ``raw(id, side, text)`` (side 0 = corpus/a,
-    1 = batch/b) ending in ``sigs(id, side, sig)`` + the asymmetric
-    ``cand`` — the DuckDB twin of :func:`asymmetric_near_dup_pairs`'s
-    candidate generation."""
-    perm_exprs = ", ".join(
-        f"list_min(list_transform(base, x -> ({a} * x + {b}) % {MERSENNE_P}))"
-        for a, b in MINHASH_PERMS
-    )
-    band_selects = " UNION ALL ".join(
-        f"SELECT id, side, {b} AS band_id, "
-        f"array_to_string(sig[{b * LSH_ROWS + 1}:{(b + 1) * LSH_ROWS}], ',') AS band_key "
-        f"FROM sigs"
-        for b in range(LSH_BANDS)
-    )
-    return f"""
-raw AS ({raw_sql}),
-t AS (SELECT id, side, {_NORM_SQL} AS norm, {_TOKS_SQL} AS toks FROM raw),
-sh2 AS (
-  SELECT id, side,
-         CASE WHEN len(toks) >= 3
-              THEN list_transform(generate_series(1, len(toks) - 2),
-                                  i -> array_to_string(toks[i:i+2], ' '))
-              ELSE [norm] END AS shingles
-  FROM t
-),
-based AS (
-  SELECT id, side,
-         list_transform(shingles, s -> {_hash60_sql('s')} % {MERSENNE_P}) AS base
-  FROM sh2
-),
-sigs AS (SELECT id, side, [{perm_exprs}] AS sig FROM based),
-bands AS ({band_selects}),
-cand AS (
-  SELECT a.id AS id_a, b.id AS id_b
-  FROM bands a JOIN bands b
-    ON a.band_id = b.band_id AND a.band_key = b.band_key
-  WHERE a.side = 0 AND b.side = 1
-  GROUP BY 1, 2
-)
-"""
+    return _lsh_pairs(sigs_a, sigs_b, id_col, threshold)
 
 
 def asymmetric_near_dup_oracle_sql(raw_sql: str, threshold: float = 0.5) -> str:
-    """Full pair-level oracle over :func:`_two_sided_sig_cte`."""
-    eq = f"""list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))"""
+    """DuckDB twin of :func:`asymmetric_near_dup_pairs` over ``raw_sql``
+    rows ``(id, side, text)`` (side 0 = corpus/a, 1 = batch/b)."""
+    eq = _sig_agree_sql()
     return f"""
-WITH {_two_sided_sig_cte(raw_sql)}
+WITH raw AS ({raw_sql}),
+{_sig_cte("raw", "id", sided=True)}, {_bands_cte(sided=True)}
 SELECT cand.id_a, cand.id_b,
        round({eq}::DOUBLE / {MINHASH_K}.0, 6) AS est_jaccard
 FROM cand
-JOIN sigs sa ON sa.id = cand.id_a AND sa.side = 0
-JOIN sigs sb ON sb.id = cand.id_b AND sb.side = 1
+JOIN sig sa ON sa.id = cand.id_a AND sa.side = 0
+JOIN sig sb ON sb.id = cand.id_b AND sb.side = 1
 WHERE {eq}::DOUBLE / {MINHASH_K}.0 >= {threshold}
 """
 
@@ -2330,8 +2274,7 @@ def lsh_eval_metrics(
 def lsh_eval_metrics_oracle_sql(
     threshold: float = 0.5, eval_max_df: int = 256
 ) -> str:
-    eq = f"""list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))"""
+    eq = _sig_agree_sql()
     return f"""
 WITH {_sig_cte()}, {_bands_cte()},
 pred AS (
@@ -2592,8 +2535,7 @@ def near_dup_pagerank_oracle_sql(
     """Unrolled-iteration DuckDB mirror; shared relations MATERIALIZED
     (the §9.1 lesson — DuckDB inlines CTEs by default and a relation
     referenced per round would re-run the whole LSH pipeline each time)."""
-    eq_terms = f"""list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))"""
+    eq_terms = _sig_agree_sql()
     parts = [
         f"""pairs AS MATERIALIZED (
   SELECT cand.id_a, cand.id_b FROM cand
@@ -2827,8 +2769,6 @@ def pagerank_topn(
     # coverage join, where this conversion was measured 2x WORSE and
     # reverted), and the 6 per-round eager checkpoint job storms
     # collapse into the final consumer's job chain.
-    from ..cache import loop_conf
-
     with loop_conf(ew.sparkSession, ew, nodes, pr):
         for _ in range(rounds):
             inflow = (
@@ -2898,9 +2838,7 @@ prs AS (
   FROM cand
   JOIN sig sa ON sa.id = cand.id_a
   JOIN sig sb ON sb.id = cand.id_b
-  WHERE list_sum(list_transform(generate_series(1, {MINHASH_K}),
-        i -> CASE WHEN sa.sig[i] = sb.sig[i] THEN 1 ELSE 0 END))::DOUBLE
-        / {MINHASH_K}.0 >= {threshold}
+  WHERE {_sig_agree_sql()}::DOUBLE / {MINHASH_K}.0 >= {threshold}
 ),
 {",".join(parts)}
 SELECT rank, doc_id, pr_int,

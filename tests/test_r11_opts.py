@@ -264,7 +264,7 @@ def test_synth_wav_twin_rejects_negative_ids():
     )
 
     _synth_wav_bytes(7, 1)  # non-negative: fine
-    with pytest.raises(AssertionError):
+    with pytest.raises(ValueError):
         _synth_wav_bytes(-1, 1)
 
 

@@ -304,3 +304,29 @@ class TestNearDupPagerank:
         # drift per node per round is the only slack)
         assert abs(total - 1.0) < 1e-4 * len(out) + 1e-6
         assert all(r.deg >= 1 for r in out)
+
+
+def test_column_memo_never_serves_plan_bound_column(spark):
+    """``df["c"]`` stringifies exactly like ``F.col("c")`` but resolves
+    only against df's plan: a signature tree built from it must not be
+    served to another DataFrame, while bare names keep hitting the memo."""
+    from datafusion_functions_extra_spark.functions import text as TX
+
+    # a column name no other test builds a memoized tree from
+    schema = "doc_id bigint, memo_probe_text string"
+    df1 = spark.createDataFrame([(1, A)], schema)
+    df2 = spark.createDataFrame([(2, B)], schema)
+    bound = df1["memo_probe_text"]
+    df1.select(
+        SIM.minhash_signature(bound), SIM.simhash32(bound), TX.token_count(bound)
+    ).collect()
+    name = F.col("memo_probe_text")
+    row = df2.select(
+        SIM.minhash_signature(name).alias("sig"),
+        SIM.simhash32(name).alias("sh"),
+        TX.token_count(name).alias("n"),
+    ).first()
+    assert len(row.sig) == SIM.MINHASH_K
+    assert row.n == len(B.split())
+    assert SIM.minhash_signature(F.col("memo_probe_text")) is SIM.minhash_signature(name)
+    assert TX.token_count("memo_probe_text") is TX.token_count("memo_probe_text")
